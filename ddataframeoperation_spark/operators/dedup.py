@@ -174,54 +174,6 @@ def minhash_signature(shingle_col: Column, num_hashes: int = 32) -> Column:
     )
 
 
-#: Spark XXH64 primes (org.apache.spark.sql.catalyst.expressions.XXH64) —
-#: the pinned hash family of the MinHash signature plane. The numpy
-#: reimplementation below is bit-for-bit equal to Spark's ``xxhash64``
-#: long/int paths (parity-tested in tests/test_opt_r14.py); Spark
-#: guarantees hash stability across releases, so the two can never drift.
-_XXH_P1 = 0x9E3779B185EBCA87
-_XXH_P2 = 0xC2B2AE3D27D4EB4F
-_XXH_P3 = 0x165667B19E3779F9
-_XXH_P4 = 0x85EBCA77C2B2AE63
-_XXH_P5 = 0x27D4EB2F165667C5
-
-
-def _np_xxh64_long(v, seed):
-    """Vectorized Spark ``XXH64.hashLong`` over a uint64 ndarray (or
-    scalar) ``v`` with uint64 ``seed``. All arithmetic wraps mod 2^64."""
-    import numpy as np
-
-    u = np.uint64
-    h = seed + u(_XXH_P5) + u(8)
-    k1 = v * u(_XXH_P2)
-    k1 = ((k1 << u(31)) | (k1 >> u(33))) * u(_XXH_P1)
-    h = h ^ k1
-    h = ((h << u(27)) | (h >> u(37))) * u(_XXH_P1) + u(_XXH_P4)
-    h ^= h >> u(33)
-    h *= u(_XXH_P2)
-    h ^= h >> u(29)
-    h *= u(_XXH_P3)
-    h ^= h >> u(32)
-    return h
-
-
-def _np_xxh64_int(v, seed):
-    """Vectorized Spark ``XXH64.hashInt`` (4-byte input, zero-extended)
-    over uint64 ``seed`` array/scalar; ``v`` is a plain Python int."""
-    import numpy as np
-
-    u = np.uint64
-    h = seed + u(_XXH_P5) + u(4)
-    h = h ^ (u(v & 0xFFFFFFFF) * u(_XXH_P1))
-    h = ((h << u(23)) | (h >> u(41))) * u(_XXH_P2) + u(_XXH_P3)
-    h ^= h >> u(33)
-    h *= u(_XXH_P2)
-    h ^= h >> u(29)
-    h *= u(_XXH_P3)
-    h ^= h >> u(32)
-    return h
-
-
 def minhash_band_table(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -229,7 +181,6 @@ def minhash_band_table(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    arrow_signature: bool = True,
 ) -> DataFrame:
     """(id, band, bucket) banded-MinHash table — the LSH index itself.
 
@@ -242,77 +193,34 @@ def minhash_band_table(
     stored index without recomputing corpus signatures
     (minhash_candidates_incremental).
 
-    ``arrow_signature`` (r14, guide §4.2): the per-seed hashing + min
-    aggregation runs as a streaming Arrow kernel — per record batch,
-    ``xxhash64(h0, seed)`` for all k seeds is ~10 vectorized uint64 ops
-    each (the common inner ``hashLong(h0, 42)`` computed ONCE instead of
-    per seed, which the JVM expression form cannot share because the
-    seed is baked into each xxhash64 call), then a per-batch partial
-    min per id; the JVM merges partials with the same map-side-combining
-    groupBy as before. Bit-identical output (the numpy XXH64 is
-    parity-pinned against Spark's), bounded memory (one Arrow batch per
-    step — no blocked-kernel boundedness contract needed), same shuffle
-    shape (partials are ≤ ids-per-batch rows). ``False`` keeps the pure
-    JVM aggregate: k ``min(xxhash64(h0, s))`` columns in whole-stage
-    codegen. (The closed-form alternative — one giant nested
-    transform/array_min expression per row — falls out of codegen and
-    re-evaluates the shingle expression per hash: ~100× slower measured.)
+    The signature is one map-side-combining aggregate: k
+    ``min(xxhash64(h0, s))`` columns in whole-stage codegen. (A
+    ``mapInArrow`` numpy kernel for the per-seed hashing measured slower
+    end to end — BASELINE.md "MinHash signature"; the closed-form
+    alternative — one giant nested transform/array_min expression per
+    row — falls out of codegen and re-evaluates the shingle expression
+    per hash: ~100× slower measured.)
+
+    NULL text drops: it has no shingles, as in :func:`jaccard_pairs`
+    (without the filter the shingler would read it as one empty shingle
+    and bucket it with every empty document).
     """
     rows_per_band = num_hashes // bands
     exploded = (
-        df.withColumn("_toks", F.split(normalized_text(text_col), " "))
+        df.filter(F.col(text_col).isNotNull())
+        .withColumn("_toks", F.split(normalized_text(text_col), " "))
         .select(
             F.col(id_col).alias("id"),
             F.explode(ngram_shingles(F.col("_toks"), shingle_n)).alias("sh"),
         )
         .select("id", F.xxhash64("sh").alias("h0"))
     )
-    hcols = [f"h{s}" for s in range(num_hashes)]
-    if arrow_signature:
-        id_type = dict(exploded.dtypes)["id"]
-        k = num_hashes
-
-        def _partial_sig(batches):
-            import numpy as np
-            import pyarrow as pa
-
-            aggs = [(h, "min") for h in hcols]
-            with np.errstate(over="ignore"):
-                for b in batches:
-                    if b.num_rows == 0:
-                        continue
-                    h0 = b.column("h0").to_numpy(
-                        zero_copy_only=False
-                    ).astype(np.int64).view(np.uint64)
-                    base = _np_xxh64_long(h0, np.uint64(42))
-                    cols = {"id": b.column("id")}
-                    for s in range(k):
-                        cols[hcols[s]] = pa.array(
-                            _np_xxh64_int(s, base).view(np.int64)
-                        )
-                    g = (
-                        pa.table(cols)
-                        .group_by("id", use_threads=False)
-                        .aggregate(aggs)
-                    )
-                    yield from g.select(
-                        ["id"] + [f"{h}_min" for h in hcols]
-                    ).rename_columns(["id"] + hcols).to_batches()
-
-        partial = exploded.mapInArrow(
-            _partial_sig,
-            f"id {id_type}, " + ", ".join(f"{h} long" for h in hcols),
-        )
-        sig = partial.groupBy("id").agg(
-            *[F.expr(f"min({h}) AS {h}") for h in hcols]
-        )
-    else:
-        sig = exploded.groupBy("id").agg(
-            *[
-                F.expr(f"min(xxhash64(h0, {s})) AS h{s}")
-                for s in range(num_hashes)
-            ]
-        )
+    sig = exploded.groupBy("id").agg(
+        *[
+            F.expr(f"min(xxhash64(h0, {s})) AS h{s}")
+            for s in range(num_hashes)
+        ]
+    )
     band_structs = ", ".join(
         "struct({b} AS band, xxhash64({cols}) AS bucket)".format(
             b=b,
@@ -561,6 +469,10 @@ def connected_components(
     """
     from pyspark.sql import functions as SF
 
+    if on_nonconverged not in ("raise", "warn"):
+        raise ValueError(
+            f"on_nonconverged must be 'raise' or 'warn', got {on_nonconverged!r}"
+        )
     if block_col is not None:
         return _cc_block_kernel(pairs, block_col)
 
@@ -652,10 +564,6 @@ def connected_components(
         .distinct()
         .withColumn("component", SF.col("id"))
     )
-    if on_nonconverged not in ("raise", "warn"):
-        raise ValueError(
-            f"on_nonconverged must be 'raise' or 'warn', got {on_nonconverged!r}"
-        )
     converged = False
     for _ in range(max_iterations):
         # Hook as ONE aggregation (r13, guide §2.4): the neighbor
@@ -850,7 +758,6 @@ def jaccard_pairs(
     group_col: str | None = None,
     threshold: float = 0.5,
     shingle_n: int | None = None,
-    arrow_kernel: bool = True,
     keep_group: bool = False,
 ) -> DataFrame:
     """B32 — exact token-set Jaccard similarity via explode + equi-join on
@@ -877,17 +784,16 @@ def jaccard_pairs(
     (true for any row-level blocking key — a document has one source);
     the group value of a pair is then well-defined.
 
-    When ``group_col`` is given, ``arrow_kernel=True`` (default) scores
-    each block with one numpy matmul (binary doc×block-vocab matrix ·
-    its transpose = ALL pairwise intersections) instead of the
-    inverted-index self-join — ~7× at sf0.1, same exact result. The
-    kernel holds one block in memory (the cosine-kernel contract); the
-    inverted index remains the unblocked/100 TB default, where block
-    vocabulary × block size is unbounded.
+    When ``group_col`` is given, each block is scored with one numpy
+    matmul (binary doc×block-vocab matrix · its transpose = ALL pairwise
+    intersections) instead of the inverted-index self-join — ~7× at
+    sf0.1, same exact result. The kernel holds one block in memory (the
+    cosine-kernel contract); the inverted index is the ungrouped/100 TB
+    path, where there is no block to bound.
     """
     if keep_group and group_col is None:
         raise ValueError("keep_group requires group_col")
-    if group_col is not None and arrow_kernel:
+    if group_col is not None:
         return _jaccard_pairs_block_kernel(
             df, id_col, text_col, group_col, threshold, shingle_n, keep_group
         )
@@ -897,11 +803,9 @@ def jaccard_pairs(
     )
     tok = pre.select(
         F.col(id_col).alias("id"),
-        *( [F.col(group_col).alias("grp")] if group_col else [] ),
         F.explode(F.array_distinct(units)).alias("tok"),
     )
     sizes = tok.groupBy("id").agg(F.count("*").alias("sz"))
-    join_on = ["tok"] + (["grp"] if group_col else [])
     # Document-frequency pruning: a token that occurs in exactly one
     # document can never contribute to an intersection, yet such tokens
     # (hapax legomena — typically ~half the vocabulary, and every typo,
@@ -910,7 +814,7 @@ def jaccard_pairs(
     # unpruned ``sizes``. The window count partitions by the same key the
     # self-join shuffles on, so the exchange (and sort) is computed once
     # and reused by both join sides.
-    w = Window.partitionBy(*join_on)
+    w = Window.partitionBy("tok")
     tok = (
         tok.withColumn("_df", F.count("*").over(w))
         .filter(F.col("_df") >= 2)
@@ -918,21 +822,14 @@ def jaccard_pairs(
     )
     a = tok.alias("a")
     b = tok.alias("b")
-    # keep_group rides the intersection aggregate as an extra group key —
-    # free under the one-group-per-id contract (each (id_a, id_b) pair
-    # lives in exactly one group, so the grouping is unchanged).
-    grp_keys = [F.col("a.grp").alias("_grp")] if keep_group else []
     inter = (
-        a.join(b, on=join_on)
+        a.join(b, on="tok")
         .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), *grp_keys
-        )
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count("*").alias("inter"))
     )
     sz_a = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
     sz_b = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
-    tail = [F.col("_grp").alias(group_col)] if keep_group else []
     return (
         inter.join(sz_a, "id_a")
         .join(sz_b, "id_b")
@@ -941,7 +838,7 @@ def jaccard_pairs(
             F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
         )
         .filter(F.col("jacc") >= threshold)
-        .select("id_a", "id_b", F.round("jacc", 4).alias("jacc"), *tail)
+        .select("id_a", "id_b", F.round("jacc", 4).alias("jacc"))
     )
 
 
@@ -963,16 +860,15 @@ def jaccard_refine(
     row-local set table) and intersects them ROW-LOCALLY.
 
     Result-identical to ``jaccard_pairs(df, threshold=t, ...)
-    .join(candidates, ["id_a","id_b"], "leftsemi")`` (same normalized
-    units, same unpruned sizes, same unrounded threshold comparison,
-    same 4dp rounding) — but the corpus-wide inverted-index self-join
-    never runs. Candidate rows whose ids are absent from ``df`` drop
-    (inner joins), duplicates collapse, and NULL-id rows drop — the
-    semi-join form's behavior. Candidates are additionally restricted
-    to ``id_a < id_b`` (ADVICE r13): the inverted-index form only ever
-    emits ordered pairs, so a reversed or self-pair candidate must
-    score NOTHING for the documented identity to hold for ANY
-    candidate list, not just minhash_candidates' ordered output.
+    .join(canonicalised candidates, ["id_a","id_b"], "leftsemi")`` (same
+    normalized units, same unpruned sizes, same unrounded threshold
+    comparison, same 4dp rounding) — but the corpus-wide inverted-index
+    self-join never runs. Canonicalised candidates: each pair is
+    reoriented to ``(least, greatest)`` — the inverted-index form only
+    emits ordered pairs, so a reversed candidate scores as its ordered
+    twin — then duplicates collapse and self-pairs drop. Candidate rows
+    whose ids are absent from ``df`` drop (inner joins), and NULL-id
+    rows drop — the semi-join form's behavior.
 
     Returns (id_a, id_b, jacc).
     """
@@ -984,7 +880,10 @@ def jaccard_refine(
         F.col(id_col).alias("_id"), F.array_distinct(units).alias("_set")
     )
     cand = (
-        candidates.select("id_a", "id_b")
+        candidates.select(
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
+        )
         .filter(F.col("id_a") < F.col("id_b"))
         .distinct()
     )
@@ -1659,7 +1558,6 @@ def triangle_count(
     pairs: DataFrame,
     a_col: str = "id_a",
     b_col: str = "id_b",
-    block_col: str | None = None,
 ) -> DataFrame:
     """B32 adjunct — global triangle census of an undirected similarity
     graph (e.g. the near-dup pair set): one row of
@@ -1685,22 +1583,7 @@ def triangle_count(
 
     Returns one row: (n_edges, n_wedges, n_triangles). Self-loops are
     dropped; duplicate/reversed input pairs collapse.
-
-    ``block_col`` (r14 optimization, the :func:`common_neighbor_pairs`
-    blocked-matmul pattern): when every pair row carries a blocking key
-    and no node spans blocks (true for pair lists built by a blocked
-    generator — e.g. intra-fingerprint-group pairs), every edge, wedge
-    and triangle lives inside one block, so the census decomposes into
-    per-block counts summed at the end: ONE grouped Arrow kernel
-    (oriented 0/1 adjacency U per block; wedges = Σ C(outdeg, 2),
-    triangles = Σ (U·U)∘U — exact integers in float64, ≪ 2^53) replaces
-    the Σdeg² wedge self-join + semi-join. Identical one-row output.
-    Blocked-kernel contract: one BLOCK's adjacency is dense in one task
-    (same caller-known boundedness as the jaccard/common-neighbor
-    kernels); the wedge join stays the unblocked/100 TB default.
     """
-    if block_col is not None:
-        return _triangle_block_kernel(pairs, a_col, b_col, block_col)
     e = (
         pairs.select(
             F.least(F.col(a_col), F.col(b_col)).alias("lo"),
@@ -1723,71 +1606,6 @@ def triangle_count(
         closed.agg(F.count("*").cast("long").alias("n_triangles"))
     )
     return stats
-
-
-def _triangle_block_kernel(
-    pairs: DataFrame, a_col: str, b_col: str, block_col: str
-) -> DataFrame:
-    """Blocked triangle census (see :func:`triangle_count`): one grouped
-    Arrow kernel per block over the oriented (lo < hi) 0/1 adjacency,
-    per-block (n_edges, n_wedges, n_triangles) summed to the one-row
-    global census. Self-loops dropped, duplicate/reversed pairs
-    collapsed and NULL endpoints skipped exactly as on the join path."""
-    import numpy as np
-    import pandas as pd
-
-    edges = pairs.select(
-        F.col(a_col).alias("id_a"),
-        F.col(b_col).alias("id_b"),
-        F.col(block_col).alias("_blk"),
-    ).filter(F.col("id_a").isNotNull() & F.col("id_b").isNotNull())
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        zero = pd.DataFrame(
-            {"n_edges": [0], "n_wedges": [0], "n_triangles": [0]}
-        )
-        if len(pdf) == 0:
-            return zero
-        a = pdf["id_a"].to_numpy()
-        b = pdf["id_b"].to_numpy()
-        ids = np.unique(np.concatenate([a, b]))
-        n = len(ids)
-        ia = np.searchsorted(ids, a)
-        ib = np.searchsorted(ids, b)
-        lo = np.minimum(ia, ib)
-        hi = np.maximum(ia, ib)
-        keep = lo < hi  # drop self-loops
-        code = np.unique(lo[keep].astype(np.int64) * n + hi[keep])
-        if len(code) == 0:
-            return zero
-        U = np.zeros((n, n), dtype=np.float64)
-        U[code // n, code % n] = 1.0
-        outdeg = U.sum(axis=1).astype(np.int64)
-        wedges = int((outdeg * (outdeg - 1) // 2).sum())
-        tri = int(((U @ U) * U).sum())
-        return pd.DataFrame(
-            {
-                "n_edges": [len(code)],
-                "n_wedges": [wedges],
-                "n_triangles": [tri],
-            }
-        )
-
-    from ddataframeoperation_spark.operators.script import apply_script_grouped
-
-    per_block = apply_script_grouped(
-        edges, ["_blk"], kernel,
-        "n_edges long, n_wedges long, n_triangles long",
-    )
-    # coalesce: zero blocks (empty pair list) must still yield the one
-    # all-zero census row the join path's count aggregates produce.
-    return per_block.agg(
-        F.coalesce(F.sum("n_edges"), F.lit(0)).cast("long").alias("n_edges"),
-        F.coalesce(F.sum("n_wedges"), F.lit(0)).cast("long").alias("n_wedges"),
-        F.coalesce(F.sum("n_triangles"), F.lit(0))
-        .cast("long")
-        .alias("n_triangles"),
-    )
 
 
 def containment_pairs(

@@ -9979,14 +9979,11 @@ def b33sj(spark: SparkSession, sf: str) -> DataFrame:
     l = emb.filter(F.col("vec_id") < 250)
     r = emb.filter(F.col("vec_id") >= 250)
     cents = similarity.kmeans_centroids(emb, k=8, iters=5)
-    # r13 optimization: the registered query now runs the PRODUCTION
-    # arrow_kernel path (per-cell BLAS matmul, guide §4.2) instead of
-    # the interpreted per-pair fold it pinned in r12 — measured
-    # 3.5 s → 0.9 s on the exhaustive sf0.1 probe. Result identity is
-    # not assumed from the ~1e-16 summation-order story: the kernel
-    # output was hash-proven against the DuckDB oracle at sf0.001/0.01/
-    # 0.1 before the switch, and kernel/fold winner parity (incl. tie
-    # and NULL/NaN classes) stays pinned in tests/test_round12_ops.py.
+    # Scoring is the per-cell BLAS kernel (guide §4.2). Result identity
+    # is not assumed from the ~1e-16 summation-order story: the output is
+    # hash-proven against the DuckDB oracle at sf0.001/0.01/0.1, and the
+    # winners (incl. tie and NULL/NaN classes) are checked against a
+    # pure-Python brute force in tests/test_opt_r14.py on this probe.
     return similarity.semantic_join(l, r, cents, nprobe=None)
 
 
@@ -10430,12 +10427,6 @@ def b32tc(spark: SparkSession, sf: str) -> DataFrame:
     pairs = g.join(g2, on="fp").filter(F.col("id") < F.col("id2")).select(
         F.col("id").alias("id_a"), F.col("id2").alias("id_b")
     )
-    # r14 note: the blocked matmul census (triangle_count(block_col="fp"),
-    # parity-tested) was measured HERE and kept OFF: this fixture's fp
-    # blocks are tiny (894 groups, max 14 nodes, Σdeg² ≈ 26k wedges), so
-    # one grouped-map kernel invocation per block costs more than the
-    # whole wedge join — the kernel is for dense-block graphs (the
-    # common_neighbors shape: ~10^8 wedges), not this one.
     return dedup.triangle_count(pairs)
 
 

@@ -12,6 +12,9 @@ no parallelism at all); here the session is the unit of scale. Defaults:
 - Arrow enabled so any Pandas-UDF boundary is vectorized, never row-at-a-time;
 - UTC session timezone so timestamp semantics are stable vs the DuckDB
   oracle;
+- the package's parent directory on the Python workers' ``PYTHONPATH``
+  (ahead of any inherited entries), so kernels that ship package
+  functions to workers import from any working directory;
 - broadcast threshold left at default 10 MB — dimension tables (region,
   nation, supplier, part at TPC-H ratios) broadcast automatically, and
   operators that *know* a side is dimensional also hint explicitly.
@@ -20,10 +23,14 @@ no parallelism at all); here the session is the unit of scale. Defaults:
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark"]
+
+#: Directory holding the ``ddataframeoperation_spark`` package.
+_PACKAGE_PARENT = str(Path(__file__).resolve().parent.parent)
 
 
 def get_spark(app_name: str = "ddataframeoperation_spark") -> SparkSession:
@@ -55,6 +62,11 @@ def get_spark(app_name: str = "ddataframeoperation_spark") -> SparkSession:
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/ddfo-warehouse"),
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # Workers unpickle kernels by module name and their sys.path holds
+        # only their own working directory, so without this a grouped
+        # kernel fails with ModuleNotFoundError outside the repo.
+        # Spark appends the workers' own PYTHONPATH after this entry.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     if "spark.master" not in os.environ.get("SPARK_CONF", ""):
         builder = builder.master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))

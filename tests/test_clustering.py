@@ -63,6 +63,18 @@ def test_connected_components_nonconvergence_raises_and_warns(spark):
     assert len(labels) == 65
 
 
+def test_connected_components_rejects_bad_on_nonconverged(spark):
+    import pytest
+
+    # A 3-edge graph takes the single-task endgame, which never consults
+    # on_nonconverged; the bad value must still raise, before any job.
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 8)], "id_a long, id_b long"
+    )
+    with pytest.raises(ValueError, match="on_nonconverged"):
+        dedup.connected_components(pairs, on_nonconverged="ignore")
+
+
 def test_cluster_dedup_keeps_one_per_cluster(spark):
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in (1, 2, 3, 4, 10, 11, 99)],

@@ -62,27 +62,37 @@ def test_jaccard_keep_group_both_paths(spark):
         (3, "alpha beta", "s1"),
         (10, "red green blue", "s2"),
         (11, "red green blue", "s2"),
+        (12, "alpha beta gamma", "s2"),  # cross-group near-dup of 1
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    for arrow_kernel in (True, False):
-        out = dedup.jaccard_pairs(
-            docs, group_col="source", threshold=0.5,
-            arrow_kernel=arrow_kernel, keep_group=True,
+    out = dedup.jaccard_pairs(
+        docs, group_col="source", threshold=0.5, keep_group=True
+    )
+    assert out.columns == ["id_a", "id_b", "jacc", "source"]
+    got = sorted(map(tuple, out.collect()))
+    base = sorted(
+        map(
+            tuple,
+            dedup.jaccard_pairs(
+                docs, group_col="source", threshold=0.5
+            ).collect(),
         )
-        assert out.columns == ["id_a", "id_b", "jacc", "source"]
-        got = sorted(map(tuple, out.collect()))
-        base = sorted(
-            map(
-                tuple,
-                dedup.jaccard_pairs(
-                    docs, group_col="source", threshold=0.5,
-                    arrow_kernel=arrow_kernel,
-                ).collect(),
-            )
+    )
+    # same pairs/scores as without keep_group, block value appended
+    assert [(a, b, j) for a, b, j, _ in got] == base
+    assert all(g == ("s1" if a < 10 else "s2") for a, b, j, g in got)
+    # the grouped kernel equals the ungrouped inverted index restricted
+    # to same-group pairs
+    src = {i: g for i, _, g in rows}
+    ungrouped = sorted(
+        (a, b, j)
+        for a, b, j in map(
+            tuple, dedup.jaccard_pairs(docs, threshold=0.5).collect()
         )
-        # same pairs/scores as without keep_group, block value appended
-        assert [(a, b, j) for a, b, j, _ in got] == base
-        assert all(g == ("s1" if a < 10 else "s2") for a, b, j, g in got)
+        if src[a] == src[b]
+    )
+    assert base == ungrouped and len(base) > 0
+    assert (1, 12, 1.0) not in base
 
 
 def test_jaccard_keep_group_requires_group_col(spark):
@@ -151,6 +161,30 @@ def test_jaccard_refine_matches_semijoined_pairs(spark):
         n = sorted(map(tuple, new.collect()))
         assert o == n, f"thr={thr} shingle_n={sn}: {o} != {n}"
     assert len(n) > 0
+
+
+def test_jaccard_refine_reorients_reversed_and_duplicated_pairs(spark):
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog today"),
+        (2, "the quick brown fox jumps over the lazy dog today!"),
+        (3, "the quick brown fox leaps over the lazy dog today"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    ordered = spark.createDataFrame([(1, 2), (1, 3)], "id_a long, id_b long")
+    messy = spark.createDataFrame(
+        [(2, 1), (1, 2), (2, 1), (3, 1), (3, 3), (None, 1)],
+        "id_a long, id_b long",
+    )
+    want = sorted(
+        map(tuple, dedup.jaccard_refine(docs, ordered, threshold=0.1).collect())
+    )
+    got = sorted(
+        map(tuple, dedup.jaccard_refine(docs, messy, threshold=0.1).collect())
+    )
+    # reversed pairs score as their ordered twin, duplicates collapse,
+    # self-pairs and NULL ids score nothing
+    assert got == want
+    assert [(a, b) for a, b, _ in got] == [(1, 2), (1, 3)]
 
 
 def test_pagerank_kernel_matches_iterative(spark):

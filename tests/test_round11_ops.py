@@ -222,11 +222,14 @@ def test_bloom_planner_empty_build_side(spark):
 
 
 def test_semantic_join_matches_bruteforce_with_ties(spark):
-    # The r11 plan change (row_number window -> map-side max(struct))
+    # The r11 plan change (row_number window -> map-side min(struct))
     # must preserve exact top-1 semantics INCLUDING the lowest-right-id
     # tiebreak. Tie-heavy adversarial data: vectors drawn from a tiny
-    # alphabet so many right rows share the exact winning cosine.
-    import itertools
+    # alphabet so many right rows share the exact winning cosine. Plus
+    # the no-valid-score classes: NULL-element and zero-norm candidates
+    # score NaN and lose to any real score, and a left row with no
+    # scorable candidate (zero-norm left) emits NaN with the lowest rid.
+    from bruteforce import NAN, nearest_right, semantic_join_result
 
     from ddataframeoperation_spark.operators.similarity import semantic_join
 
@@ -238,30 +241,20 @@ def test_semantic_join_matches_bruteforce_with_ties(spark):
         [1.0, 0.0, 1.0, 0.0],
     ]
     rows = [(i, alphabet[i % len(alphabet)]) for i in range(40)]
+    rows[3] = (3, [0.0, 0.0, 0.0, 0.0])       # zero-norm left row
+    rows[10] = (10, [1.0, None, 0.0, 0.0])    # NULL-element candidate
+    rows[11] = (11, [0.0, 0.0, 0.0, 0.0])     # zero-norm candidate
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
     left = df.filter("vec_id < 10")
     right = df.filter("vec_id >= 10")
     cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 1.0, 1.0]]
-    got = {
-        r["l_vec_id"]: (r["r_vec_id"], r["cos_sim"])
-        for r in semantic_join(left, right, cents, nprobe=None).collect()
-    }
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5
-        nb = sum(x * x for x in b) ** 0.5
-        return d / (na * nb)
-
-    lmap = dict(rows[:10])
-    rmap = dict(rows[10:])
-    for lid, lv in lmap.items():
-        best = max(
-            ((cos(lv, rv), -rid) for rid, rv in rmap.items()),
-        )
-        want_rid = -best[1]
-        assert got[lid][0] == want_rid, (lid, got[lid], want_rid)
-        assert got[lid][1] == round(best[0], 4)
+    got = semantic_join_result(semantic_join(left, right, cents, nprobe=None))
+    want = nearest_right(rows[:10], rows[10:])
+    assert got == want
+    # the rules are exercised, not vacuous
+    assert want[3] == (10, NAN)
+    assert all(rid not in (10, 11) for lid, (rid, _) in want.items() if lid != 3)
+    assert want[0] == (15, 1.0)  # five exact ties: 15, 20, 25, ... -> 15
 
 
 def test_match_one_to_one_suffix_collision_rejected(spark):

@@ -116,11 +116,12 @@ def test_semantic_join_null_score_never_wins(spark):
 
 
 def test_semantic_join_arrow_kernel_matches_fold(spark):
-    # The BLAS cogroup kernel (production default) and the sequential
-    # JVM fold (oracle-exact mode) must pick the same winners with the
-    # same 4dp scores — summation-order noise is ~1e-16, far below the
-    # rounding contract; ties break to the lower right id on both paths.
+    # The BLAS cogroup kernel must pick the winners and 4dp scores of a
+    # sequential-fold brute force — summation-order noise is ~1e-16, far
+    # below the rounding contract; ties break to the lower right id.
     import random
+
+    from bruteforce import nearest_right, semantic_join_result
 
     from ddataframeoperation_spark.operators.similarity import (
         kmeans_centroids,
@@ -132,24 +133,15 @@ def test_semantic_join_arrow_kernel_matches_fold(spark):
         (i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(120)
     ]
     # exact-duplicate vectors across the right side exercise the rid
-    # tiebreak on both paths
+    # tiebreak
     rows[60] = (60, list(rows[61][1]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     left = emb.filter(F.col("vec_id") < 20)
     right = emb.filter(F.col("vec_id") >= 20)
     cents = kmeans_centroids(emb, k=4, iters=3)
 
-    def key(df):
-        return {
-            r["l_vec_id"]: (r["r_vec_id"], r["cos_sim"])
-            for r in df.collect()
-        }
-
-    fast = key(semantic_join(left, right, cents, nprobe=None))
-    exact = key(
-        semantic_join(left, right, cents, nprobe=None, arrow_kernel=False)
-    )
-    assert fast == exact and len(fast) == 20
+    fast = semantic_join_result(semantic_join(left, right, cents, nprobe=None))
+    assert fast == nearest_right(rows[:20], rows[20:]) and len(fast) == 20
 
 
 # --------------------------------- rolling_origin_folds column clash
@@ -573,27 +565,25 @@ def test_run_id_validated_against_sweep_pattern(spark):
 def test_semantic_join_unscorable_group_nan_on_both_paths(spark):
     import math
 
+    from bruteforce import NAN, nearest_right, semantic_join_result
+
     from ddataframeoperation_spark.operators.similarity import semantic_join
 
     # Every candidate of the left row has a NULL element -> no scorable
-    # match. Kernel (NaN in matmul) and fold (NULL dot -> NaN coalesce)
-    # must AGREE: emit the row with cos_sim NaN, lowest-rid winner.
-    left = spark.createDataFrame(
-        [(1, [1.0, 0.0])], "vec_id long, embedding array<double>"
+    # match: emit the row with cos_sim NaN, lowest-rid winner.
+    lrows = [(1, [1.0, 0.0])]
+    rrows = [(8, [1.0, None]), (9, [None, 2.0])]
+    schema = "vec_id long, embedding array<double>"
+    out = semantic_join(
+        spark.createDataFrame(lrows, schema),
+        spark.createDataFrame(rrows, schema),
+        centroids=[[1.0, 0.0]], nprobe=1,
     )
-    right = spark.createDataFrame(
-        [(8, [1.0, None]), (9, [None, 2.0])],
-        "vec_id long, embedding array<double>",
-    )
-    for flag in (True, False):
-        out = semantic_join(
-            left, right, centroids=[[1.0, 0.0]], nprobe=1,
-            arrow_kernel=flag,
-        ).collect()
-        assert len(out) == 1, flag
-        row = out[0].asDict()
-        assert row["r_vec_id"] == 8, flag      # lowest-rid NaN tiebreak
-        assert math.isnan(row["cos_sim"]), flag
+    rows = out.collect()
+    assert len(rows) == 1
+    assert math.isnan(rows[0]["cos_sim"])
+    got = semantic_join_result(out)
+    assert got == nearest_right(lrows, rrows) == {1: (8, NAN)}
 
 
 def test_brier_decomposition_empty_input_yields_zero_rows(spark):

@@ -77,6 +77,8 @@ def test_binary_quantize_multiword_nulls_match_python(spark, seed):
 
 @pytest.mark.parametrize("seed", [5, 17])
 def test_semantic_join_arrow_fold_parity_random(spark, seed):
+    from bruteforce import nearest_right, semantic_join_result
+
     from ddataframeoperation_spark.operators.similarity import (
         kmeans_centroids,
         semantic_join,
@@ -93,16 +95,8 @@ def test_semantic_join_arrow_fold_parity_random(spark, seed):
         emb.filter(F.col("vec_id") != 50), k=3, iters=2
     )
 
-    def key(flag):
-        return {
-            r["l_vec_id"]: (r["r_vec_id"], r["cos_sim"])
-            for r in semantic_join(
-                left, right, cents, nprobe=None, arrow_kernel=flag
-            ).collect()
-        }
-
-    fast, exact = key(True), key(False)
-    assert fast == exact and len(fast) == 15
+    fast = semantic_join_result(semantic_join(left, right, cents, nprobe=None))
+    assert fast == nearest_right(rows[:15], rows[15:]) and len(fast) == 15
     # the NULL-element candidate never wins anywhere
     assert all(rid != 50 for rid, _ in fast.values())
 

@@ -426,47 +426,39 @@ class TestDegenerateEmbeddingContracts:
         df = self._emb(spark).withColumn(
             "blk", F.lit(0)
         )
-        for kernel in (True, False):
-            got = sorted(
-                (r["id_a"], r["id_b"])
-                for r in cosine_neardup_pairs(
-                    df,
-                    threshold=0.9,
-                    block_col="blk",
-                    arrow_kernel=kernel,
-                ).collect()
-            )
-            # only the (1, 2) pair clears 0.9; rows 3/4/5 pair with
-            # nothing on BOTH scoring paths
-            assert got == [(1, 2)], f"arrow_kernel={kernel}: {got}"
+        got = sorted(
+            (r["id_a"], r["id_b"])
+            for r in cosine_neardup_pairs(
+                df, threshold=0.9, block_col="blk"
+            ).collect()
+        )
+        # only the (1, 2) pair clears 0.9; rows 3/4/5 pair with nothing
+        assert got == [(1, 2)], got
 
     def test_semantic_join_zero_norm_left_emits_nan_not_crash(self, spark):
-        import math
+        from bruteforce import NAN, nearest_right, semantic_join_result
 
         from ddataframeoperation_spark.operators.similarity import (
             semantic_join,
         )
 
-        left = spark.createDataFrame(
-            [(1, [1.0, 0.0]), (2, [0.0, 0.0])],
-            "vec_id long, embedding array<double>",
-        )
-        right = spark.createDataFrame(
-            [(7, [1.0, 0.0]), (8, [0.0, 1.0])],
-            "vec_id long, embedding array<double>",
-        )
+        schema = "vec_id long, embedding array<double>"
+        lrows = [(1, [1.0, 0.0]), (2, [0.0, 0.0])]
+        rrows = [(7, [1.0, 0.0]), (8, [0.0, 1.0])]
         cents = [[1.0, 0.0], [0.0, 1.0]]
-        for kernel in (True, False):
-            rows = {
-                r["l_vec_id"]: r
-                for r in semantic_join(
-                    left, right, cents, nprobe=2, arrow_kernel=kernel
-                ).collect()
-            }
-            assert rows[1]["r_vec_id"] == 7 and rows[1]["cos_sim"] == 1.0
-            # the zero-norm left row emits the documented NaN "no
-            # scorable candidate" marker — it must NOT raise
-            assert math.isnan(rows[2]["cos_sim"]), f"kernel={kernel}"
+        got = semantic_join_result(
+            semantic_join(
+                spark.createDataFrame(lrows, schema),
+                spark.createDataFrame(rrows, schema),
+                cents,
+                nprobe=2,
+            )
+        )
+        # the zero-norm left row emits the documented NaN "no scorable
+        # candidate" marker with the lowest right id — it must NOT raise
+        assert got == nearest_right(lrows, rrows) == {
+            1: (7, 1.0), 2: (7, NAN)
+        }
 
     def test_centroid_assign_degenerate_lands_cell0(self, spark):
         from pyspark.sql import functions as F
